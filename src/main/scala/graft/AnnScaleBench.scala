@@ -29,16 +29,8 @@ object AnnScaleBench {
     graft.functions.GraftFunctions.register(spark)
     val n = Tables.vectorCount(spark, dir)
 
-    def topSets(df: org.apache.spark.sql.DataFrame)
-        : (Double, Map[Long, Set[Long]]) = {
-      df.write.format("noop").mode("overwrite").save() // warm-up
-      val t0 = System.nanoTime()
-      val rows = df.collect().map(r => (r.getLong(0), r.getLong(2)))
-      ((System.nanoTime() - t0) / 1e9,
-        rows.groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap)
-    }
-
-    val (tBrute, brute) = topSets(SimOps.simTopk(spark, dir))
+    import Recall.timedTopSets
+    val (tBrute, brute) = timedTopSets(SimOps.simTopk(spark, dir))
 
     // scale path: √n coarse cells (the frozen 10-seed build is the
     // ORACLE configuration — at 1M vectors it would scan 40 % of the
@@ -84,29 +76,21 @@ object AnnScaleBench {
       "pruned serve plan lost its DPP partition filter")
     require(!servePlan.contains("dynamicpruningexpression(true)"),
       "DPP degraded to scan-everything at this scale")
-    val (tServe, served) = topSets(
+    val (tServe, served) = timedTopSets(
       SimOps.annSearchPruned(spark, qFrame(col("vec_id") < 20),
         cents, store))
-    def recallOf(m: Map[Long, Set[Long]]): Double = brute.keys.toSeq.map {
-      q => (brute(q) & m.getOrElse(q, Set.empty)).size.toDouble /
-        brute(q).size
-    }.sum / brute.size
+    def recallOf(m: Map[Long, Set[Long]]): Double = Recall.recallOf(brute, m)
 
     // planted near-dup recall: every 400th vector is its predecessor
     // plus tiny noise; the copy must retrieve its partner in top-5
     val plantedQs = (1L until n by 400L).toSeq
-    def plantedRecall(df: org.apache.spark.sql.DataFrame): Double = {
-      val got = df.collect().map(r => (r.getLong(0), r.getLong(2)))
-        .groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
-      plantedQs.count(q =>
-        got.getOrElse(q, Set.empty).contains(q - 1)).toDouble /
-        plantedQs.size
-    }
+    def plantedRecall(df: org.apache.spark.sql.DataFrame): Double =
+      Recall.plantedRecall(plantedQs, Recall.topSets(df))
     val plantedIvf = plantedRecall(SimOps.annSearchPruned(spark,
       qFrame(col("vec_id") % 400 === 1), cents, store))
 
     val bits = SimOps.srpBitsPerBand(n)
-    val (tSrp, srp) = topSets(SimOps.annSrpWith(spark, dir, bits,
+    val (tSrp, srp) = timedTopSets(SimOps.annSrpWith(spark, dir, bits,
       SimOps.srpBands, col("vec_id") < 20))
     val plantedSrp = plantedRecall(SimOps.annSrpWith(spark, dir, bits,
       SimOps.srpBands, col("vec_id") % 400 === 1))
@@ -120,7 +104,7 @@ object AnnScaleBench {
       .parquet(s"$dir/srp_table")
     val tSrpBuild = (System.nanoTime() - tsb0) / 1e9
     val srpStore = spark.read.parquet(s"$dir/srp_table")
-    val (tSrpServed, srpServed) = topSets(
+    val (tSrpServed, srpServed) = timedTopSets(
       SimOps.annSrpFromStore(spark, dir, srpStore))
 
     require(plantedIvf >= 0.98, s"IVF planted recall $plantedIvf < 0.98")

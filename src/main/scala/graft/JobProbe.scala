@@ -11,7 +11,8 @@ import org.apache.spark.sql.SparkSession
   * (scan tasks? shuffle tasks? checkpoint jobs? range-sampling jobs?).
   *
   * Args: <queryName> [runs (default 3)]
-  * Env: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS as in Bench.
+  * Env: SPARK_GRAFT_SF_DIR as in Bench; SPARK_GRAFT_CPUS (default: the
+  * available processors).
   */
 object JobProbe {
   def main(args: Array[String]): Unit = {
@@ -21,7 +22,8 @@ object JobProbe {
     val fn = SparkEntry.queries.getOrElse(name,
       sys.error(s"unknown query $name"))
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)
     val builder = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)

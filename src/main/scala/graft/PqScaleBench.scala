@@ -54,10 +54,7 @@ object PqScaleBench {
       val r = f
       ((System.nanoTime() - t0) / 1e9, r)
     }
-    def topSets(df: org.apache.spark.sql.DataFrame)
-        : Map[Long, Set[Long]] =
-      df.collect().map(r => (r.getLong(0), r.getLong(2)))
-        .groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
+    import Recall.topSets
 
     // ------------------------------------------- one-off index builds
     val (tEncode, encoded) = timed {
@@ -111,10 +108,7 @@ object PqScaleBench {
 
     // ------------------------------------------------------ query time
     val (tBrute, brute) = timed(topSets(SimOps.simTopk(spark, dir)))
-    def recall(m: Map[Long, Set[Long]]): Double = brute.keys.toSeq.map {
-      q => (brute(q) & m.getOrElse(q, Set.empty)).size.toDouble /
-        brute(q).size
-    }.sum / brute.size
+    def recall(m: Map[Long, Set[Long]]): Double = Recall.recallOf(brute, m)
 
     // exhaustive scans: 4-bit continuity + the 8-bit prefix/strat A/B
     val (tAdc, adcSets) =
@@ -178,9 +172,7 @@ object PqScaleBench {
     val plantedPred = col("vec_id") % 4000 === 1
     val plantedQsR = (1L until n by 16000L).toSeq
     val plantedPredR = col("vec_id") % 16000 === 1
-    def plantedRecall(qs: Seq[Long], m: Map[Long, Set[Long]]): Double =
-      qs.count(q =>
-        m.getOrElse(q, Set.empty).contains(q - 1)).toDouble / qs.size
+    import Recall.plantedRecall
     val (tPlanted, plRecall) = timed(plantedRecall(plantedQs, topSets(
       SimOps.annIvfPq(spark, dir, probes = 4, queryPred = plantedPred,
         encodedOpt = Some(encoded)))))

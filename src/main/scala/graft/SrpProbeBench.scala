@@ -35,31 +35,16 @@ object SrpProbeBench {
     val bits = SimOps.srpBitsPerBand(n)
     val bands = SimOps.srpBands
 
-    def topSets(df: org.apache.spark.sql.DataFrame)
-        : (Double, Map[Long, Set[Long]]) = {
-      df.write.format("noop").mode("overwrite").save() // warm-up
-      val t0 = System.nanoTime()
-      val rows = df.collect().map(r => (r.getLong(0), r.getLong(2)))
-      ((System.nanoTime() - t0) / 1e9,
-        rows.groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap)
-    }
-    val (tBrute, brute) = topSets(SimOps.simTopk(spark, dir))
-    def recallOf(m: Map[Long, Set[Long]]): Double = brute.keys.toSeq.map {
-      q => (brute(q) & m.getOrElse(q, Set.empty)).size.toDouble /
-        brute(q).size
-    }.sum / brute.size
+    import Recall.timedTopSets
+    val (tBrute, brute) = timedTopSets(SimOps.simTopk(spark, dir))
+    def recallOf(m: Map[Long, Set[Long]]): Double = Recall.recallOf(brute, m)
 
     val plantedQs = (1L until n by 400L).toSeq
-    def plantedRecall(df: org.apache.spark.sql.DataFrame): Double = {
-      val got = df.collect().map(r => (r.getLong(0), r.getLong(2)))
-        .groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
-      plantedQs.count(q =>
-        got.getOrElse(q, Set.empty).contains(q - 1)).toDouble /
-        plantedQs.size
-    }
+    def plantedRecall(df: org.apache.spark.sql.DataFrame): Double =
+      Recall.plantedRecall(plantedQs, Recall.topSets(df))
 
     val tiers = Seq(0, 1, 2).map { radius =>
-      val (t, sets) = topSets(SimOps.annSrpMultiProbe(spark, dir, bits,
+      val (t, sets) = timedTopSets(SimOps.annSrpMultiProbe(spark, dir, bits,
         bands, radius, col("vec_id") < 20))
       val rec = recallOf(sets)
       val cands = SimOps.srpCandidateCountMulti(spark, dir, bits, bands,
@@ -114,20 +99,12 @@ object SrpProbeBench {
         s""""radius_hist":$hist$extra}"""
     }
     val (tAdapt, adRows) = adaptiveRun(5, col("vec_id") < 20)
-    val adSets = adRows.map(r => (r.getLong(0), r.getLong(2)))
-      .groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
-    val adRecall = recallOf(adSets)
+    val adRecall = recallOf(Recall.topSets(adRows))
     require(adRecall >= tiers.last._3 - 0.05,
       s"adaptive iid recall $adRecall below the radius-2 tier " +
         s"${tiers.last._3} — the quality bar failed to escalate")
     val (tPlant, plRows) = adaptiveRun(1, col("vec_id") % 400 === 1)
-    val plRecall = {
-      val got = plRows.map(r => (r.getLong(0), r.getLong(2)))
-        .groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
-      plantedQs.count(q =>
-        got.getOrElse(q, Set.empty).contains(q - 1)).toDouble /
-        plantedQs.size
-    }
+    val plRecall = Recall.plantedRecall(plantedQs, Recall.topSets(plRows))
     val plR0 = plRows.count(_.getAs[Int]("probe_radius") == 0)
     require(plRecall >= 0.98 && plR0 == plRows.length,
       s"planted adaptive: recall $plRecall, ${plRows.length - plR0} " +
@@ -141,9 +118,7 @@ object SrpProbeBench {
     // rows verbatim, Round17OpsSpec), wall recorded next to the ladder's.
     val (tSkip, skRows) = adaptiveRun(5, col("vec_id") < 20,
       skipAhead = true)
-    val skSets = skRows.map(r => (r.getLong(0), r.getLong(2)))
-      .groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
-    val skRecall = recallOf(skSets)
+    val skRecall = recallOf(Recall.topSets(skRows))
     require(skRecall >= tiers.last._3 - 0.05,
       s"skip-ahead iid recall $skRecall below the radius-2 tier " +
         s"${tiers.last._3} — parking dropped starved queries short")

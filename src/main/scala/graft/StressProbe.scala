@@ -73,18 +73,12 @@ object StressProbe {
     val sqrtScore = score("sqrtn", sqrtCells)
     // ANN at 10×: recall@5 of the IVF probe path vs the brute-force scan
     // (llm_sim_topk — the sanctioned exact baseline), plus both timings.
-    def topSets(df: org.apache.spark.sql.DataFrame): (Double, Map[Long, Set[Long]]) = {
-      df.write.format("noop").mode("overwrite").save() // warm-up
-      val t0 = System.nanoTime()
-      val rows = df.collect().map(r => (r.getLong(0), r.getLong(2)))
-      ((System.nanoTime() - t0) / 1e9,
-        rows.groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap)
-    }
-    val (tBrute, brute) = topSets(graft.operators.SimOps.simTopk(spark, dir))
-    val (tAnn, ann) = topSets(graft.operators.SimOps.annIvf(spark, dir))
-    def recallOf(m: Map[Long, Set[Long]]): Double = brute.keys.toSeq.map {
-      q => (brute(q) & m.getOrElse(q, Set.empty)).size.toDouble / brute(q).size
-    }.sum / brute.size
+    import Recall.timedTopSets
+    val (tBrute, brute) =
+      timedTopSets(graft.operators.SimOps.simTopk(spark, dir))
+    val (tAnn, ann) =
+      timedTopSets(graft.operators.SimOps.annIvf(spark, dir))
+    def recallOf(m: Map[Long, Set[Long]]): Double = Recall.recallOf(brute, m)
     // the SERVING path: index built + persisted once (the amortized model
     // artifact), query-time = probe + in-cell search only
     val (cDf, aDf) = graft.operators.SimOps.annIndex(spark, dir)
@@ -94,14 +88,15 @@ object StressProbe {
       .filter(org.apache.spark.sql.functions.col("vec_id") < 20)
       .selectExpr("vec_id AS q_id", "embedding AS q_emb",
         "sqrt(graft_dot(embedding, embedding)) AS q_norm")
-    val (tServe, served) = topSets(graft.operators.SimOps.annSearch(spark, q,
+    val (tServe, served) = timedTopSets(graft.operators.SimOps.annSearch(
+      spark, q,
       spark.read.parquet(s"$dir/ann_index/centroids"),
       spark.read.parquet(s"$dir/ann_index/assigned")))
     // cell-PARTITIONED store + literal partition pruning: the scan itself
     // shrinks to the probed partitions
     aDf.write.mode("overwrite").partitionBy("cell")
       .parquet(s"$dir/ann_index/assigned_bycell")
-    val (tPruned, pruned) = topSets(graft.operators.SimOps.annSearchPruned(
+    val (tPruned, pruned) = timedTopSets(graft.operators.SimOps.annSearchPruned(
       spark, q,
       spark.read.parquet(s"$dir/ann_index/centroids"),
       spark.read.parquet(s"$dir/ann_index/assigned_bycell")))
@@ -115,7 +110,7 @@ object StressProbe {
     val candAdaptive =
       if (bitsAdaptive == 4) candFixed
       else graft.operators.SimOps.srpCandidateCount(spark, dir, bitsAdaptive)
-    val (tSrp, srp) = topSets(graft.operators.SimOps.annSrp(spark, dir))
+    val (tSrp, srp) = timedTopSets(graft.operators.SimOps.annSrp(spark, dir))
     // PLANTED near-dup recall — the claim the adaptive sizing rests on,
     // measured instead of asserted: every 400th embedding is its
     // predecessor plus tiny noise (cos ≈ 0.999, the StressGen plant), and
@@ -127,15 +122,10 @@ object StressProbe {
     // band-collision survival — the half of the adaptive-bits trade the
     // r8 probe didn't measure; iid `recall_srp` above is the other half).
     val plantedQs = (1L until n by 400L).toSeq
-    def plantedRecall(bits: Int, bands: Int): Double = {
-      val got = graft.operators.SimOps.annSrpWith(spark, dir, bits, bands,
-        org.apache.spark.sql.functions.col("vec_id") % 400 === 1)
-        .collect().map(r => (r.getLong(0), r.getLong(2)))
-        .groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
-      plantedQs.count(q =>
-        got.getOrElse(q, Set.empty).contains(q - 1)).toDouble /
-        plantedQs.size
-    }
+    def plantedRecall(bits: Int, bands: Int): Double =
+      Recall.plantedRecall(plantedQs, Recall.topSets(
+        graft.operators.SimOps.annSrpWith(spark, dir, bits, bands,
+          org.apache.spark.sql.functions.col("vec_id") % 400 === 1)))
     val plantedFixed = plantedRecall(4, graft.operators.SimOps.srpBands)
     val plantedAdaptive =
       if (bitsAdaptive == 4) plantedFixed
@@ -144,7 +134,7 @@ object StressProbe {
     // recall back (each band is an independent collision chance) at 2×
     // table rows — the recall lever a corpus turns after a bits step-up
     val knobBands = 2 * graft.operators.SimOps.srpBands
-    val (tKnob, srpKnob) = topSets(graft.operators.SimOps.annSrpWith(
+    val (tKnob, srpKnob) = timedTopSets(graft.operators.SimOps.annSrpWith(
       spark, dir, bitsAdaptive, knobBands,
       org.apache.spark.sql.functions.col("vec_id") < 20))
     val candKnob = graft.operators.SimOps.srpCandidateCount(
@@ -160,7 +150,7 @@ object StressProbe {
     // neighbors are real near-dups runs the default; one hunting
     // marginal iid-like neighbors buys bands.
     val bandsCurve = Seq(4, 8, 12, 16).map { b =>
-      val (tB, setsB) = topSets(graft.operators.SimOps.annSrpWith(
+      val (tB, setsB) = timedTopSets(graft.operators.SimOps.annSrpWith(
         spark, dir, bitsAdaptive, b,
         org.apache.spark.sql.functions.col("vec_id") < 20))
       val candB = graft.operators.SimOps.srpCandidateCount(

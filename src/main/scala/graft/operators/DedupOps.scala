@@ -228,11 +228,11 @@ object DedupOps extends OpModule {
   def spanScrub(s: SparkSession, dir: String): DataFrame =
     spanScrubFrame(Tables.documents(s, dir))
 
-  /** [[spanScrub]] over an arbitrary `(doc_id, text)` frame — the spec /
-    * probe entry point. `legacyProbe = true` restores the pre-r14
-    * per-token linear scan of the raw start list, kept ONLY so
-    * [[graft.SpanScrubProbe]] can measure the asymptotic gap on a
-    * planted pathological doc (it is never a query path).
+  /** [[spanScrub]] over an arbitrary `(doc_id, text)` frame — the spec
+    * entry point. `legacyProbe = true` restores the pre-r14 per-token
+    * linear scan of the raw start list, kept as the reference form
+    * Round14OpsSpec compares the gap-slice form against (it is never a
+    * query path).
     */
   private[graft] def spanScrubFrame(docsIn: DataFrame,
       legacyProbe: Boolean = false): DataFrame = {
@@ -300,7 +300,7 @@ object DedupOps extends OpModule {
     * uncovered GAPS between runs and flattening, O(L + I) per doc with
     * I = contaminated runs and NO per-token lambda at all. Two designs
     * this replaced, both measured on the planted 50k-token duplicated
-    * doc ([[graft.SpanScrubProbe]]): (a) the original per-token
+    * doc (BENCH_spanscrub_patho_r14.json): (a) the original per-token
     * `exists` over the raw start list — O(L·S), 96 s at the
     * pathological point (S ≈ L); (b) a per-token exists over the merged
     * intervals — O(L·I) ON PAPER, but `CollapseProject` inlines the
@@ -884,8 +884,9 @@ object DedupOps extends OpModule {
 
   /** [[clustersFromEdges]] returning (labels, rounds-executed) — the
     * round count is the scale variable for iterative CC (a 100 TB run
-    * pays one edge-join shuffle per round), so benches record it
-    * ([[graft.CcChainBench]]) instead of inferring it from wall time.
+    * pays one edge-join shuffle per round), so it is recorded
+    * (CCCHAIN_r15.json; Round15OpsSpec pins the chain round counts)
+    * instead of inferred from wall time.
     * `jump = false` disables the pointer-jump step — plain min-label
     * propagation, whose round count IS the component diameter; it exists
     * as the measured CONTRAST for the jump's O(log d) claim, never a

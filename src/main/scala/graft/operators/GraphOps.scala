@@ -380,8 +380,9 @@ object GraphOps extends OpModule {
     * Scale shape: the [[strongEdges]] census is paid once; each round is
     * one join of the census against the label frame (broadcast here —
     * nation-sized; past [[lpaBroadcastMaxNodes]] the SAME [[lpaRounds]]
-    * machinery keys the join by node — [[lpaAuto]] dispatches, and
-    * LPASCALE_r16 proves the shuffle form at 1.2M planted nodes), a
+    * machinery keys the join by node — LPASCALE_r16 records the shuffle
+    * form at 1.2M planted nodes, and Round16OpsSpec pins both forms to
+    * the same labels on random and planted-clique graphs), a
     * map-side-combined (node, label) vote count, and a node-keyed
     * window over the vote census. Rounds never touch fact data.
     */
@@ -420,8 +421,9 @@ object GraphOps extends OpModule {
 
   /** The synchronous-LPA round loop over an explicit (node) frame and a
     * symmetric (u, v) edge frame — the machinery behind [[labelProp]] /
-    * [[modularity]], factored fixture-free so the stress tier
-    * (LpaScaleBench) runs the REAL code at planted-community scale.
+    * [[modularity]], factored fixture-free so specs run the REAL code
+    * on explicit graphs (Round16OpsSpec: planted cliques in both
+    * dispatch forms; LPASCALE_r16 holds the 1.2M-node record).
     * Each round: one join of the edge census against the label frame
     * (BROADCAST when the node census fits [[lpaBroadcastMaxNodes]],
     * else a node-keyed shuffle hash join — same rows either way, the
@@ -471,21 +473,6 @@ object GraphOps extends OpModule {
     lbl
   }
 
-  /** [[lpaRounds]] with the size dispatch made explicit: count the node
-    * census once (cheap next to the rounds it gates) and pick the
-    * broadcast or shuffle form, with the stderr breadcrumb the
-    * attribution dispatch set the precedent for.
-    */
-  private[graft] def lpaAuto(nodes: DataFrame, sym: DataFrame,
-      rounds: Int = 3): DataFrame = {
-    val n = nodes.count()
-    val bcast = n <= lpaBroadcastMaxNodes
-    System.err.println(s"[graft] lpa dispatch: nodes=$n " +
-      s"bar=$lpaBroadcastMaxNodes -> " +
-      (if (bcast) "broadcast" else "shuffle"))
-    lpaRounds(nodes, sym, rounds, bcast)
-  }
-
   /** Newman modularity of the [[labelProp]] partition, per community:
     * q_c = e_c/m − (d_c/2m)² — intra-community edge share minus the
     * share a degree-preserving random graph would put there. The
@@ -512,8 +499,8 @@ object GraphOps extends OpModule {
   }
 
   /** The modularity scoring tail over explicit label/edge frames —
-    * factored fixture-free (the [[lpaRounds]] stance) so LpaScaleBench
-    * scores planted-community graphs with the REAL code; the
+    * factored fixture-free (the [[lpaRounds]] stance) so Round16OpsSpec
+    * scores a planted-community graph with the REAL code; the
     * `broadcastLabels` dispatch mirrors [[lpaRounds]]': endpoint-keyed
     * hash joins when the label frame outgrows the broadcast bar.
     */

@@ -1758,8 +1758,9 @@ object SimOps extends OpModule {
     * the expression form through the exhaustive-probe ≡ llm_ann_pq8
     * identity). Exists because the expression form evaluates 8·K
     * interpreted lambda distances per query row — ~2.5 s of the 3.9 s
-    * llm_ann_pq8 wall at 256-code books (PqStageProbe, r18) — while the
-    * driver loop over the request-sized query batch is milliseconds.
+    * llm_ann_pq8 wall at 256-code books (the r18 stage split in
+    * OPTIMIZATION_r18.md, wave 2) — while the driver loop over the
+    * request-sized query batch is milliseconds.
     */
   private def pqLutFrameDriver(s: SparkSession, dir: String,
       cb: Seq[Seq[Seq[Double]]], queryPred: Column): DataFrame = {
@@ -1829,9 +1830,9 @@ object SimOps extends OpModule {
     // it runs once per corpus row: un-materialized, the encode sits on
     // the ADC join's stream side, and whole-stage codegen defers
     // non-condition stream columns INTO the per-build-row loop — the
-    // r19 PqStageProbe measured graft_pq_encode re-running once per
-    // joined PAIR (join_only 0.27 s vs join+ADC 2.7 s on the 256-code
-    // twin; the served twins, which stream stored codes, never paid
+    // r19 stage split (commit 8f51cbd) measured graft_pq_encode
+    // re-running once per joined PAIR (join_only 0.27 s vs join+ADC
+    // 2.7 s on the 256-code twin; the served twins, which stream stored codes, never paid
     // this). The pin is the served artifact's exact content, built
     // in-query (guide §1.2: don't compute things 20×).
     annPqOn(s, dir, graft.Checkpoints.truncate(
@@ -1883,91 +1884,14 @@ object SimOps extends OpModule {
     // exactly this identity). The expression form evaluated 8·K
     // interpreted lambda distances per query row inside the broadcast
     // build — at 256-code books that was ~2.5 s of the 3.9 s
-    // llm_ann_pq8 wall (PqStageProbe, r18: join_only 0.49 s vs
-    // scan_adc 3.0 s). The query batch is request-sized (the
-    // [[trainSample]] bounded-collect class), so the driver loop is
-    // O(|queries| · 8K), corpus-independent.
+    // llm_ann_pq8 wall (OPTIMIZATION_r18.md, wave 2: join without the
+    // ADC column 0.4 s vs join + ADC 3.0 s). The query batch is
+    // request-sized (the [[trainSample]] bounded-collect class), so the
+    // driver loop is O(|queries| · 8K), corpus-independent.
     val qs = pqLutFrameDriver(s, dir, cb, queryPred)
     val scored = broadcast(qs).join(corpus, col("q_id") =!= col("vec_id"))
       .withColumn("adc_micro", pqAdcCol)
     rankTopK(scored, "vec_id", "adc_micro", descending = false, 5)
-  }
-
-  /** The join+ADC stage of [[annPq8]] WITHOUT the top-k aggregate — a
-    * probe surface for [[graft.PqStageProbe]] so the scan and the
-    * aggregate cost separately (round-18 measurement).
-    */
-  private[graft] def pq8AdcScanProbe(s: SparkSession, dir: String,
-      cb: Seq[Seq[Seq[Double]]]): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
-    val corpus = pq8Encoded(s, dir, cb).select(col("vec_id"), col("codes"))
-    val qs = Tables.embeddings(s, dir).filter(col("vec_id") < 20)
-      .select(col("vec_id").as("q_id"),
-        pqLutCol(typedlit(cb), cb.head.size).as("lut"))
-    broadcast(qs).join(corpus, col("q_id") =!= col("vec_id"))
-      .withColumn("adc_micro", pqAdcCol)
-      .select(col("q_id"), col("vec_id"), col("adc_micro"))
-  }
-
-  /** [[pq8AdcScanProbe]] with the DRIVER-built LUT frame — the shipped
-    * query's join+ADC stage without the top-k aggregate, so the r19
-    * probe can split "ADC projection" from "aggregate" under the LUT
-    * form the query actually runs (the r18 probe's expression-LUT stage
-    * conflated the interpreted LUT build with the scan).
-    */
-  private[graft] def pq8AdcScanDriverProbe(s: SparkSession, dir: String,
-      cb: Seq[Seq[Seq[Double]]]): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
-    val corpus = pq8Encoded(s, dir, cb).select(col("vec_id"), col("codes"))
-    val qs = pqLutFrameDriver(s, dir, cb, col("vec_id") < 20)
-    broadcast(qs).join(corpus, col("q_id") =!= col("vec_id"))
-      .withColumn("adc_micro", pqAdcCol)
-      .select(col("q_id"), col("vec_id"), col("adc_micro"))
-  }
-
-  /** Driver-local (q_id, lut-as-nested-seq) pairs — probe surface. */
-  private[graft] def pq8LutsLocal(s: SparkSession, dir: String,
-      cb: Seq[Seq[Seq[Double]]]): Seq[(Long, Seq[Seq[Long]])] = {
-    import s.implicits._
-    val kCodes = cb.head.size
-    val cbArr = cb.map(_.map(_.toArray).toArray).toArray
-    Tables.embeddings(s, dir).filter(col("vec_id") < 20)
-      .select(col("vec_id"), col("embedding"))
-      .as[(Long, Array[Float])].collect().sortBy(_._1).toSeq
-      .map { case (id, v) =>
-        val flat = lutFlatOf(v.map(_.toDouble), cbArr)
-        (id, (0 until pqSubspaces).map(m =>
-          flat.slice(m * kCodes, (m + 1) * kCodes).toSeq))
-      }
-  }
-
-  /** [[pq8AdcScanDriverProbe]] with the 8-lookup ADC loop replaced by a
-    * SINGLE lut entry read — isolates "carrying the 16 KB lut through
-    * the join" from "the ADC loop" (probe surface, r19 measurement).
-    */
-  private[graft] def pq8JoinLutOneLookupProbe(s: SparkSession, dir: String,
-      cb: Seq[Seq[Seq[Double]]]): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
-    val corpus = pq8Encoded(s, dir, cb).select(col("vec_id"), col("codes"))
-    val qs = pqLutFrameDriver(s, dir, cb, col("vec_id") < 20)
-    broadcast(qs).join(corpus, col("q_id") =!= col("vec_id"))
-      .select(col("q_id"), col("vec_id"),
-        element_at(element_at(col("lut"), 1), 1).as("one"))
-  }
-
-  /** The same join WITHOUT the ADC column — column pruning then drops
-    * the LUT from the broadcast side, isolating pure join mechanics
-    * (probe surface, round-18 measurement).
-    */
-  private[graft] def pq8JoinOnlyProbe(s: SparkSession, dir: String,
-      cb: Seq[Seq[Seq[Double]]]): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
-    val corpus = pq8Encoded(s, dir, cb).select(col("vec_id"), col("codes"))
-    val qs = Tables.embeddings(s, dir).filter(col("vec_id") < 20)
-      .select(col("vec_id").as("q_id"),
-        pqLutCol(typedlit(cb), cb.head.size).as("lut"))
-    broadcast(qs).join(corpus, col("q_id") =!= col("vec_id"))
-      .select(col("q_id"), col("vec_id"))
   }
 
   /** Trained-codebook PQ geometry (the Jégou et al. standard the r16

@@ -136,6 +136,37 @@ class Round16OpsSpec extends SparkSpec {
       assert(labels(bcast = true) === labels(bcast = false),
         s"trial $trial")
     }
+    // planted communities: 20 cliques of 8 plus one bridge between the
+    // min nodes of consecutive cliques. Three rounds must reproduce the
+    // min label per clique in both forms (no label leaks over a
+    // bridge), and modularityOf must score that partition Q ∈ (0.9, 1]
+    // from the exact per-community terms Σe_c/m − Σd_c²/(2m)².
+    val (nCliques, size) = (20, 8)
+    val intra = for {
+      c <- 0 until nCliques; i <- 0 until size; j <- (i + 1) until size
+    } yield ((c * size + i).toLong, (c * size + j).toLong)
+    val bridges = (0 until nCliques - 1)
+      .map(c => ((c * size).toLong, ((c + 1) * size).toLong))
+    val cliqueEdges = (intra ++ bridges).toDF("a", "b")
+    val cliqueSym = cliqueEdges.select(col("a").as("u"), col("b").as("v"))
+      .unionByName(cliqueEdges.select(col("b").as("u"), col("a").as("v")))
+    val cliqueNodes = (0L until (nCliques * size).toLong).toDF("node")
+    val planted = (0L until (nCliques * size).toLong)
+      .map(v => v -> v / size * size).toMap
+    Seq(true, false).foreach { bcast =>
+      val lbl = GraphOps.lpaRounds(cliqueNodes, cliqueSym,
+        rounds = 3, broadcastLabels = bcast)
+      assert(lbl.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+        === planted, s"planted labeling, broadcast=$bcast")
+      val r = GraphOps.modularityOf(lbl, cliqueEdges,
+        broadcastLabels = bcast)
+        .agg(count(lit(1)), sum(col("e_c")), sum(col("d_c") * col("d_c")))
+        .head()
+      assert(r.getLong(0) === nCliques.toLong)
+      val m = (intra.size + bridges.size).toDouble
+      val q = r.getLong(1) / m - r.getLong(2) / (4.0 * m * m)
+      assert(q > 0.9 && q <= 1.0, s"planted modularity $q, broadcast=$bcast")
+    }
   }
 
   test("perplexityKnServed: byte-identical to the inline KN twin " +
